@@ -164,3 +164,72 @@ def test_explode_sidebets_labels(spark, lake):
     assert not b.bet_won  # duration 4 outside the explicit (1, 3] window
     assert b.ticks_to_rug == 3
     assert not b.bet_in_optimal_zone
+
+
+def test_open_lake_starts_no_spark_job(spark, lake):
+    """Opening the lake reads no file footer: the declared schema replaces
+    inference, so no job runs until a query does. A footer-merging read in
+    a second group is the control: once its job shows in the status
+    tracker, every job the first group could have started shows too (the
+    listener bus delivers events in order)."""
+    import time
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("open_event_lake", "read_event_lake")
+        read_event_lake(spark, lake)
+        sc.setJobGroup("open_merge_schema", "mergeSchema control")
+        spark.read.option("mergeSchema", "true").parquet(lake)
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("open_merge_schema") and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("open_merge_schema")
+    assert tracker.getJobIdsForGroup("open_event_lake") == []
+
+
+def test_declared_schema_matches_inference(spark, lake):
+    """Column names, order and types are what schema merging plus partition
+    type inference yield for a `write_event_lake` lake: the 19 envelope data
+    columns, then doc_type:string, then date:date."""
+    from vectra_player_spark.schema import ENVELOPE_SCHEMA
+
+    declared = read_event_lake(spark, lake).schema
+    inferred = spark.read.option("mergeSchema", "true").parquet(lake).schema
+    assert [(f.name, f.dataType) for f in declared] == [
+        (f.name, f.dataType) for f in inferred
+    ]
+    data_cols = [f.name for f in ENVELOPE_SCHEMA.fields if f.name != "doc_type"]
+    assert declared.names == data_cols + ["doc_type", "date"]
+    assert declared.simpleString().endswith(",doc_type:string,date:date>")
+
+
+def test_lake_file_missing_envelope_columns_reads_null(spark, tmp_path):
+    """union_by_name: a file written without player_id/price reads them as
+    NULL, so player lookups run on a lake where no file holds the column
+    yet, and pick up the rows of files that do once they land."""
+    path = str(tmp_path / "events_parquet")
+    env = normalize_envelope(spark.createDataFrame(_fixture_rows()))
+    actions = env.where(F.col("doc_type") == "player_action")
+    lacking = actions.drop("player_id", "price").withColumn(
+        "date", F.lit("2026-01-11")
+    )
+    write_event_lake(lacking, path)
+
+    df = read_event_lake(spark, path)
+    assert df.count() == 3
+    assert df.where(F.col("player_id").isNull() & F.col("price").isNull()).count() == 3
+    es = EventStore(df)
+    assert es.get_player_actions("player-alice").count() == 0
+
+    write_event_lake(actions, path)
+    es = EventStore(read_event_lake(spark, path))
+    got = es.get_player_actions("player-alice").collect()
+    assert [(r.game_id, str(r.date)) for r in got] == [
+        ("g1", "2026-01-10"),
+        ("g3", "2026-01-10"),
+    ]
+    nulls = read_event_lake(spark, path, date="2026-01-11")
+    assert nulls.where(F.col("player_id").isNotNull()).count() == 0

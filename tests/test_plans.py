@@ -31,9 +31,21 @@ def _layout_free(spark, tmp_path):
     _BUCKETED_FACTS.clear()
 
 
+_PLAN_STRING_CAP = "spark.sql.maxPlanStringLength"
+
+
 def _physical(spark, sf_dir, name):
+    """The WHOLE physical plan as text. The session caps plan strings at
+    256 KiB, which keeps only the head of the big curation funnels' plans;
+    the cap is lifted for this render alone (to Spark's own maximum) so the
+    guards below see every operator."""
     df = plans.QUERIES[name].spark_fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    cap = spark.conf.get(_PLAN_STRING_CAP)
+    spark.conf.set(_PLAN_STRING_CAP, str(2**31 - 16))
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(_PLAN_STRING_CAP, cap)
 
 
 def test_q1_scan_is_pruned_and_pushed(spark, sf_dir):

@@ -749,3 +749,51 @@ def test_nfc_dedup_report_collapses_composition_variants(spark, sf_dir):
     assert rows["raw"]["n_docs"] == rows["nfc"]["n_docs"]
     assert rows["raw"]["n_groups"] - rows["nfc"]["n_groups"] == 4
     assert rows["nfc"]["n_dup_docs"] - rows["raw"]["n_dup_docs"] == 7
+
+
+def test_brute_force_topk_scores_double_vectors_in_float64(spark):
+    """array<double> vectors are scored in float64 end to end: every pair's
+    rounded cosine and every rank equal a numpy float64 reference that
+    accumulates the dot products left to right (the fold's operation
+    order) and rounds half-up on the shortest repr, as Spark's round does.
+    A float32 pass over the inputs moves some 6-digit cosines."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from vectra_player_spark.operators.knn import brute_force_topk
+
+    rng = np.random.default_rng(20)
+    Q = rng.standard_normal((5, 16))
+    C = rng.standard_normal((200, 16))
+    q_ids = list(range(10_000, 10_005))
+    c_ids = list(range(200))
+    schema = "vec_id long, embedding array<double>"
+    queries = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in zip(q_ids, Q)], schema
+    )
+    cands = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in zip(c_ids, C)], schema
+    )
+    got = sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.cosine_sim)
+        for r in brute_force_topk(queries, cands, k=len(c_ids)).collect()
+    )
+
+    def l2r(a, b):
+        acc = np.zeros(len(b), dtype=np.float64)
+        for d in range(a.shape[-1]):
+            acc += a[..., d] * b[:, d]
+        return acc
+
+    c_norm = np.sqrt(l2r(C, C))
+    want = []
+    for qid, q in zip(q_ids, Q):
+        cos = l2r(q, C) / (np.sqrt(l2r(q[None, :], q[None, :]))[0] * c_norm)
+        sims = [
+            float(Decimal(repr(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+            for x in cos
+        ]
+        order = sorted(zip(sims, c_ids), key=lambda p: (-p[0], p[1]))
+        want += [(qid, r + 1, cid, s) for r, (s, cid) in enumerate(order)]
+    assert got == sorted(want)

@@ -81,9 +81,7 @@ def brute_force_topk(
             by_len.setdefault(len(v), []).append(i)
     groups = {}
     for length, idxs in by_len.items():
-        Q64 = np.array([q_vecs[i] for i in idxs], dtype=np.float32).astype(
-            np.float64
-        )
+        Q64 = np.array([q_vecs[i] for i in idxs], dtype=np.float64)
         groups[length] = (
             np.array([q_ids[i] for i in idxs], dtype=np.int64),
             Q64,
@@ -112,9 +110,7 @@ def brute_force_topk(
                     cand_by_len.setdefault(len(v), []).append(j)
             for length, jdx in cand_by_len.items():
                 cid = ids[np.asarray(jdx)]
-                C64 = np.array(
-                    [vecs[j] for j in jdx], dtype=np.float32
-                ).astype(np.float64)
+                C64 = np.array([vecs[j] for j in jdx], dtype=np.float64)
                 if length in groups:
                     qid, Q64, qn = groups[length]
                     cn = _l2r_norm(C64)

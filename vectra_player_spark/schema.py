@@ -56,6 +56,23 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
+# The lake's read schema, declared so opening the lake needs no footer
+# scan: the envelope's data columns in envelope order (what each Parquet
+# file holds), then the two hive partition columns typed as partition
+# inference types them (`date=YYYY-MM-DD` reads as DateType). Nullable
+# throughout, as a file source reads every column.
+EVENT_LAKE_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, True)
+        for f in ENVELOPE_SCHEMA.fields
+        if f.name != "doc_type"
+    ]
+    + [
+        T.StructField("doc_type", T.StringType(), True),
+        T.StructField("date", T.DateType(), True),
+    ]
+)
+
 # complete_game document schema — the fields analytics actually consume
 # (SURVEY §1.3; consumers cited there). Open-world payloads keep unknown
 # fields in raw_json; this struct is the typed projection.

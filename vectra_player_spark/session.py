@@ -14,9 +14,27 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+# Share of physical RAM the driver heap gets when SPARK_DRIVER_MEMORY is
+# unset. In local mode the driver JVM is every executor at once; the rest
+# is left to the Python workers (Arrow/pandas UDFs) and the OS page cache.
+_DRIVER_HEAP_SHARE = 0.5
+
+
+def _host_driver_memory() -> str:
+    """Driver heap as a JVM size string: a fixed share of physical RAM."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(ram * _DRIVER_HEAP_SHARE) // (1024 * 1024)}m"
+
+
 def get_spark(app_name: str = "vectra_player_spark", cpus: int | None = None) -> SparkSession:
+    """Tuned session. Sized for the host unless told otherwise: `cpus`, else
+    SPARK_GRAFT_CPUS, else the CPUs in this process's affinity mask (also
+    the shuffle partition count); heap from SPARK_DRIVER_MEMORY, else a
+    fixed share of physical RAM."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # the affinity mask, not the machine's core count: a container or
+        # taskset pin sees only its own CPUs
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -30,7 +48,10 @@ def get_spark(app_name: str = "vectra_player_spark", cpus: int | None = None) ->
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode = driver-only: all executor threads share this heap.
         # Undersizing it turns back-to-back queries into GC storms.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/spark_warehouse"))
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -7,8 +7,13 @@ with buffered atomic writes (writer.py:102-292). Spark equivalents:
   protocol gives the same atomicity the reference gets from tmp→rename;
   at 100 TB the (doc_type, date) layout bounds every daily ingest batch
   and every analytic scan to the partitions it names.
-- read: partition discovery + `mergeSchema` covers the reference's
-  hive_partitioning=true, union_by_name=true reads (S2).
+- read: partition discovery under the declared `EVENT_LAKE_SCHEMA` covers
+  the reference's hive_partitioning=true, union_by_name=true reads (S2).
+  No schema is inferred: opening the lake lists files and starts no Spark
+  job, where a footer-merging read would start one per open. A file that
+  lacks some envelope columns reads them as NULL (union_by_name); columns
+  outside the envelope are not surfaced, which drops nothing written by
+  `write_event_lake` over `normalize_envelope` output.
 - compact: periodic coalesce rewrite replacing the reference's
   read-concat-rewrite appender (S6) — small-file control at scale.
 """
@@ -18,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vectra_player_spark.schema import ENVELOPE_SCHEMA
+from vectra_player_spark.schema import ENVELOPE_SCHEMA, EVENT_LAKE_SCHEMA
 
 
 def normalize_envelope(raw: DataFrame) -> DataFrame:
@@ -46,10 +51,12 @@ def read_event_lake(
     doc_type: str | None = None,
     date: str | None = None,
 ) -> DataFrame:
-    """S1/S2: hive-partitioned scan; doc_type/date filters become partition
-    pruning (check PartitionFilters in .explain), the reference's
-    glob-per-doc_type trick done by Catalyst instead of by hand."""
-    df = spark.read.option("mergeSchema", "true").parquet(path)
+    """S1/S2: hive-partitioned scan under `EVENT_LAKE_SCHEMA`; doc_type/date
+    filters become partition pruning (check PartitionFilters in .explain),
+    the reference's glob-per-doc_type trick done by Catalyst instead of by
+    hand. Envelope columns a file lacks read as NULL; columns outside the
+    envelope are not read (every `normalize_envelope` write has none)."""
+    df = spark.read.schema(EVENT_LAKE_SCHEMA).parquet(path)
     if doc_type is not None:
         df = df.where(F.col("doc_type") == doc_type)
     if date is not None:
