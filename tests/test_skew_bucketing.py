@@ -273,6 +273,50 @@ def test_q9_self_routing_discovers_layout(spark, sf_dir):
         cleanup()
 
 
+def test_empty_lake_fact_layout_rediscovered_in_fresh_session(spark, sf_dir, tmp_path):
+    """A fact layout materialized from an empty lake holds only _SUCCESS,
+    no parquet footer. A session that finds it on disk (in-memory catalog
+    and memo gone) must still register it and route, not fail inferring a
+    schema: the orderkey queries run on the empty layout."""
+    import duckdb
+
+    from vectra_player_spark import plans
+    from vectra_player_spark.operators.skew import (
+        _BUCKETED_FACTS,
+        _STALE_LAYOUTS,
+        _fact_table_name,
+        bucketed_facts_if_available,
+        materialize_bucketed_facts,
+    )
+
+    lake = tmp_path / "empty_lake"
+    lake.mkdir()
+    con = duckdb.connect()
+    for tbl in ("lineitem", "orders"):
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{sf_dir}/{tbl}.parquet') LIMIT 0)"
+            f" TO '{lake}/{tbl}.parquet' (FORMAT PARQUET)"
+        )
+
+    def forget_layout():
+        _BUCKETED_FACTS.clear()
+        _STALE_LAYOUTS.clear()
+        for name in ("lineitem", "orders"):
+            spark.sql(f"DROP TABLE IF EXISTS {_fact_table_name(name, str(lake), 32)}")
+
+    spark.conf.set("spark.vectra.bucketed.location", str(tmp_path / "layouts"))
+    try:
+        materialize_bucketed_facts(spark, str(lake))
+        forget_layout()
+        pair = bucketed_facts_if_available(spark, str(lake))
+        assert pair is not None and [df.count() for df in pair] == [0, 0]
+        forget_layout()
+        plans.QUERIES["q12_priority_shipping"].spark_fn(spark, str(lake)).collect()
+    finally:
+        forget_layout()
+        spark.conf.unset("spark.vectra.bucketed.location")
+
+
 def test_window_family_self_routing_on_events_layout(spark, sf_dir):
     """Round-5: tick_features/feature_matrix self-route onto the bucketed
     (user_id)-sorted-(user_id, event_id) events layout. Routed plan loses

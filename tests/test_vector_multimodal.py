@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from vectra_player_spark.operators.multimodal import (
     MEDIA_SCHEMA,
@@ -182,55 +181,6 @@ def test_ivfpq_kernel_cell_restriction_and_score_parity(spark):
     assert {r.neighbor_id: r.cosine_sim for r in probed2} == full
 
 
-class LanceLikeFakeStore:
-    """Test double shaped like a LanceDB/Chroma collection wrapper
-    (indexer.py:68-118): add/scan/clear against an in-process table.
-    Proves the indexer pipeline (checkpoint, chunking, embedding, search)
-    is store-agnostic — swapping in the real backend is constructor
-    config, not code."""
-
-    def __init__(self):
-        self.rows = []  # list of dicts, like a collection's records
-        self.calls = []
-
-    def add(self, embedded):
-        self.calls.append("add")
-        self.rows.extend(r.asDict() for r in embedded.collect())
-
-    def scan(self, spark):
-        self.calls.append("scan")
-        return spark.createDataFrame(
-            self.rows,
-            "chunk_id string, ts string, doc_type string, text string, "
-            "embedding array<float>",
-        )
-
-    def clear(self):
-        self.calls.append("clear")
-        self.rows = []
-
-
-def test_indexer_drives_external_store(spark, tmp_path):
-    """V2/V3/V4 against a non-parquet backend via the VectorStore seam."""
-    store = LanceLikeFakeStore()
-    idx = VectorIndexer(
-        manifest_path=str(tmp_path / "ckpt.json"), store=store
-    )
-    assert idx.build_incremental(_envelope(spark, 5)) == 5
-    assert len(store.rows) == 5
-    # checkpoint still works with an external store
-    assert idx.build_incremental(_envelope(spark, 5)) == 0
-    assert idx.build_incremental(_envelope(spark, 8)) == 3
-    assert len(store.rows) == 8
-    # search scans the external store, not a parquet path
-    hits = idx.search(spark, "game g1 tick", top_k=3).collect()
-    assert len(hits) == 3 and "g1" in hits[0].text
-    # rebuild clears the store then reindexes everything
-    assert idx.rebuild(_envelope(spark, 8)) == 8
-    assert len(store.rows) == 8
-    assert "clear" in store.calls and "scan" in store.calls
-
-
 def test_image_features_stub(spark):
     rows = [
         ("m1", "image", b"\x89PNG fake bytes", "image/png", {}),
@@ -262,14 +212,6 @@ def test_rebalance_by_bytes(spark):
     out = rebalance_by_bytes(media, target_partition_bytes=10_000)
     assert out.rdd.getNumPartitions() >= 5
     assert out.count() == 50
-
-
-def test_decode_stub_seam_raises(spark):
-    media = spark.createDataFrame(
-        [("m1", "image", b"abc", "image/png", {})], MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception, match="PIL|NotImplementedError"):
-        image_features(media, decode_stub=False).collect()
 
 
 def test_int8_quantizer_matches_numpy_reference(spark, tmp_path):
@@ -311,141 +253,6 @@ def test_int8_quantizer_matches_numpy_reference(spark, tmp_path):
             step = (hi - lo) / 255.0
             deq = lo + q * (hi - lo) / 255.0
             assert np.max(np.abs(deq - v)) <= step / 2 + 1e-12, i
-
-
-# ---------------------------------------------------------------------------
-# Import-guarded real backends (VERDICT r2 "What's missing" #2): the stub→
-# real switch must be config, and the guard must be a clear DRIVER-side
-# error when the lib is absent — tested both ways (absent: this container;
-# present: a fake module with the real packages' surface).
-# ---------------------------------------------------------------------------
-
-
-def test_lancedb_store_guard_raises_without_lib():
-    import importlib
-
-    from vectra_player_spark.operators import vector_index
-
-    if importlib.util.find_spec("lancedb") is not None:
-        pytest.skip("container unexpectedly has lancedb — guard not testable")
-    with pytest.raises(ImportError, match="lancedb"):
-        vector_index.LanceDBVectorStore("/tmp/nope")
-
-
-def test_embed_chunks_st_guard_raises_without_lib(spark):
-    import importlib
-
-    if importlib.util.find_spec("sentence_transformers") is not None:
-        pytest.skip("container unexpectedly has sentence-transformers")
-    with pytest.raises(ImportError, match="sentence-transformers"):
-        embed_chunks(
-            chunk_events(_envelope(spark, 2)), encoder="sentence-transformers"
-        )
-    with pytest.raises(ValueError, match="unknown encoder"):
-        embed_chunks(chunk_events(_envelope(spark, 2)), encoder="word2vec")
-
-
-class _FakeLanceTable:
-    def __init__(self, arrow):
-        self._batches = [arrow]
-
-    def add(self, arrow):
-        self._batches.append(arrow)
-
-    def to_arrow(self):
-        import pyarrow as pa
-
-        return pa.concat_tables(self._batches)
-
-
-class _FakeLanceDB:
-    def __init__(self):
-        self.tables: dict[str, _FakeLanceTable] = {}
-
-    def table_names(self):
-        return list(self.tables)
-
-    def create_table(self, name, arrow):
-        self.tables[name] = _FakeLanceTable(arrow)
-        return self.tables[name]
-
-    def open_table(self, name):
-        return self.tables[name]
-
-    def drop_table(self, name):
-        del self.tables[name]
-
-
-def test_lancedb_store_active_path(spark, tmp_path, monkeypatch):
-    """With the package importable, the SAME VectorIndexer flow runs against
-    LanceDB: driver-side Arrow exchange, so a sys.modules fake exercises
-    every line of the store."""
-    import sys
-    import types
-
-    fake = types.ModuleType("lancedb")
-    dbs: dict[str, _FakeLanceDB] = {}
-    fake.connect = lambda uri: dbs.setdefault(uri, _FakeLanceDB())
-    monkeypatch.setitem(sys.modules, "lancedb", fake)
-
-    from vectra_player_spark.operators.vector_index import LanceDBVectorStore
-
-    store = LanceDBVectorStore(str(tmp_path / "lance"))
-    idx = VectorIndexer(manifest_path=str(tmp_path / "ckpt.json"), store=store)
-    assert idx.build_incremental(_envelope(spark, 5)) == 5
-    assert idx.build_incremental(_envelope(spark, 5)) == 0  # checkpointed
-    assert idx.build_incremental(_envelope(spark, 8)) == 3  # delta append
-    assert store.scan(spark).count() == 8
-    hits = idx.search(spark, "game g1 tick", top_k=3).collect()
-    assert len(hits) == 3 and "g1" in hits[0].text
-    assert idx.rebuild(_envelope(spark, 8)) == 8  # drop_table + reindex
-    assert store.scan(spark).count() == 8
-
-
-_FAKE_ST_SRC = '''
-"""Fake sentence_transformers with the real encode() surface: deterministic
-byte-sum direction vectors, normalize_embeddings honored."""
-import numpy as np
-
-
-class SentenceTransformer:
-    def __init__(self, name):
-        self.name = name
-
-    def encode(self, texts, normalize_embeddings=False):
-        out = np.zeros((len(texts), 8), dtype=np.float32)
-        for i, t in enumerate(texts):
-            b = t.encode() or b"\\x00"
-            for j in range(8):
-                out[i, j] = sum(b[j::8]) + 1.0
-            if normalize_embeddings:
-                out[i] /= np.linalg.norm(out[i])
-        return out
-'''
-
-
-def test_embed_chunks_st_active_path(spark, tmp_path):
-    """The sentence-transformers encoder path end-to-end: the fake module is
-    shipped to the Python UDF workers via addPyFile (a sys.modules patch
-    would only cover the driver), proving the lazy per-executor model-cache
-    load and the batch encode call shape."""
-    mod = tmp_path / "sentence_transformers.py"
-    mod.write_text(_FAKE_ST_SRC)
-    spark.sparkContext.addPyFile(str(mod))
-    try:
-        embedded = embed_chunks(
-            chunk_events(_envelope(spark, 4)), encoder="sentence-transformers"
-        )
-        rows = embedded.collect()
-        assert all(len(r.embedding) == 8 for r in rows)
-        norms = [sum(x * x for x in r.embedding) for r in rows]
-        assert all(abs(n - 1.0) < 1e-4 for n in norms)  # normalize honored
-        again = {r.chunk_id: r.embedding for r in embedded.collect()}
-        assert all(again[r.chunk_id] == r.embedding for r in rows)
-    finally:
-        import sys
-
-        sys.modules.pop("sentence_transformers", None)
 
 
 def test_phash_band_stats_crafted_neardups(spark):
@@ -797,3 +604,80 @@ def test_brute_force_topk_scores_double_vectors_in_float64(spark):
         order = sorted(zip(sims, c_ids), key=lambda p: (-p[0], p[1]))
         want += [(qid, r + 1, cid, s) for r, (s, cid) in enumerate(order)]
     assert got == sorted(want)
+
+
+def _fold_topk(queries, cands, k):
+    """Reference top-k: the zip_with/aggregate cosine fold
+    (functions.vectors.cosine) over a broadcast cross join, ranked the
+    way brute_force_topk ranks."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from vectra_player_spark.functions.vectors import cosine
+
+    q = queries.selectExpr("vec_id AS query_id", "embedding AS q_vec")
+    c = cands.selectExpr("vec_id AS neighbor_id", "embedding AS c_vec")
+    sim = F.round(cosine("q_vec", "c_vec"), 6).alias("cosine_sim")
+    scored = (
+        F.broadcast(q)
+        .crossJoin(c)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", sim)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    )
+
+
+def test_brute_force_topk_null_element_scores_null_and_ranks_last(spark):
+    """A vector with a NULL element scores NULL against every query, as
+    the fold does (a NULL product nulls the sum), and so ranks below every
+    non-null neighbour; a query with a NULL element scores NULL against
+    every candidate. NaN would sort above every double instead."""
+    from vectra_player_spark.operators.knn import brute_force_topk
+
+    schema = "vec_id long, embedding array<double>"
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (9, [0.0, None, 1.0])], schema
+    )
+    cands = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]),
+            (2, [0.9, 0.1, 0.0]),
+            (3, [0.0, None, 1.0]),
+            (4, [0.0, 1.0, 0.0]),
+        ],
+        schema,
+    )
+    got = sorted(tuple(r) for r in brute_force_topk(queries, cands, k=3).collect())
+    assert got == sorted(tuple(r) for r in _fold_topk(queries, cands, 3).collect())
+    q0 = [r for r in got if r[0] == 0]
+    assert [r[1] for r in q0] == [1, 2, 4]  # neighbour 3 (NULL) drops out
+    q9 = [r for r in got if r[0] == 9]
+    assert q9 == [(9, 1, None, 1), (9, 2, None, 2), (9, 3, None, 3)]
+
+    everything = brute_force_topk(queries, cands, k=4).where("query_id = 0").collect()
+    last = max(everything, key=lambda r: r.rank)
+    assert (last.neighbor_id, last.cosine_sim, last.rank) == (3, None, 4)
+
+
+def test_brute_force_topk_rejects_non_integral_ids(spark):
+    """Ids come back as long, so a string id column is refused up front
+    with an error naming the column, on either side."""
+    from vectra_player_spark.operators.knn import brute_force_topk
+
+    str_ids = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
+        "doc_id string, embedding array<double>",
+    )
+    long_ids = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "doc_id long, embedding array<double>"
+    )
+    for queries, cands in ((str_ids, long_ids), (long_ids, str_ids)):
+        with pytest.raises(ValueError, match="'doc_id'.*integral"):
+            brute_force_topk(queries, cands, k=1, id_col="doc_id")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectra_player_spark.functions.vectors import cosine, dot
 
@@ -48,11 +49,24 @@ def brute_force_topk(
     against the join form at the 10× lake and the full oracle sweep.
 
     Null/ragged semantics mirror the fold: a NULL vector on either side,
-    or a LENGTH MISMATCH (zip_with null-pads the shorter side, nulling
-    the sum), yields a NULL cosine for that pair — the pair row is still
-    emitted, exactly as the join emitted it."""
+    a vector with a NULL element (the NULL product nulls the sum), or a
+    LENGTH MISMATCH (zip_with null-pads the shorter side) yields a NULL
+    cosine for that pair, which ranks below every scored neighbour — the
+    pair row is still emitted, exactly as the join emitted it.
+
+    Ids must be an integral type on both sides (a ValueError naming
+    ``id_col`` is raised otherwise); query_id and neighbor_id come back
+    as ``long``."""
     import numpy as np
     import pyarrow as pa
+
+    for side, frame in (("queries", queries), ("candidates", candidates)):
+        dt = frame.schema[id_col].dataType
+        if not isinstance(dt, T.IntegralType):
+            raise ValueError(
+                f"brute_force_topk: id_col {id_col!r} of the {side} must be an "
+                f"integral type, got {dt.simpleString()}"
+            )
 
     q_rows = queries.select(id_col, vec_col).collect()
     q_ids = [r[0] for r in q_rows]
@@ -73,11 +87,12 @@ def brute_force_topk(
             acc += M64[:, d] * M64[:, d]
         return np.sqrt(acc)
 
-    # group queries by vector length (pairs only score against equal
-    # lengths; everything else is a NULL-sim pair)
+    # group scorable queries by vector length (pairs only score against
+    # equal lengths; everything else is a NULL-sim pair)
+    q_ok = [v is not None and None not in v for v in q_vecs]
     by_len: dict[int, list[int]] = {}
     for i, v in enumerate(q_vecs):
-        if v is not None:
+        if q_ok[i]:
             by_len.setdefault(len(v), []).append(i)
     groups = {}
     for length, idxs in by_len.items():
@@ -92,7 +107,11 @@ def brute_force_topk(
     def _score_batches(batches):
         for batch in batches:
             ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vecs = batch.column(1).to_pylist()
+            vec_arr = batch.column(1)
+            vecs = vec_arr.to_pylist()
+            # one counter read per batch: only a batch holding a NULL
+            # element pays the per-vector scan
+            elem_nulls = vec_arr.values.null_count > 0
             out_q, out_n, out_s = [], [], []
 
             def emit(qq, nn, ss):
@@ -104,7 +123,7 @@ def brute_force_topk(
             cand_by_len: dict[int, list[int]] = {}
             bad: list[int] = []
             for j, v in enumerate(vecs):
-                if v is None:
+                if v is None or (elem_nulls and None in v):
                     bad.append(j)
                 else:
                     cand_by_len.setdefault(len(v), []).append(j)
@@ -130,7 +149,7 @@ def brute_force_topk(
                 other = [
                     i
                     for i, v in enumerate(q_vecs)
-                    if v is None or len(v) != length
+                    if not q_ok[i] or len(v) != length
                 ]
                 if other:
                     oq = np.array([q_ids[i] for i in other], dtype=np.int64)

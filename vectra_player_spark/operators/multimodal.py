@@ -2,8 +2,8 @@
 
 Image/audio/video travel as opaque `binary` columns with typed metadata
 structs; decode / feature-extract / resize / frame-sample run as
-Arrow-batched `mapInPandas` stages. The media LIBRARIES are not in this
-container, so each modality carries two arms:
+Arrow-batched `mapInPandas` stages. No media codec library is a
+dependency, so the formats split in two:
 
 - A REAL decode arm for the container formats the stdlib/struct can
   parse with zero codec code (round-9): WAV (`wave_features` — RIFF +
@@ -12,12 +12,10 @@ container, so each modality carries two arms:
   text header + raw 4:2:0 planes). Their payload synthesizers emit
   genuine containers whose decoded values an oracle predicts
   analytically, so the decoding itself is hash-checked cross-engine.
-- The documented stub arm for library-bound codecs (JPEG/PNG via PIL,
-  compressed audio via soundfile, compressed video via ffmpeg):
-  `decode_stub=True` (default) fabricates deterministic metadata from
-  the bytes (real plumbing — schema, batching, partition flow);
-  `decode_stub=False` raises NotImplementedError at the exact seam a
-  provisioned cluster fills in.
+- A stub arm for library-bound codecs (JPEG/PNG, compressed audio,
+  compressed video): `image_features`, `audio_features` and
+  `sample_video_frames` fabricate deterministic metadata from the bytes
+  (real plumbing — schema, batching, partition flow; no decoding).
 
 Scale notes: binary payloads dominate row size, so the stages keep
 projection narrow (never carry `content` past the stage that needs it) and
@@ -88,10 +86,9 @@ def rebalance_by_bytes(media: DataFrame, target_partition_bytes: int = 128 * 102
     return media.repartition(n_parts)
 
 
-def image_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Decode + feature-extract images. Stub fabricates deterministic
-    dimensions/luma/phash from the bytes; the real path calls PIL at the
-    marked seam."""
+def image_features(media: DataFrame) -> DataFrame:
+    """Stub image features: deterministic dimensions/luma/phash derived
+    from the bytes' md5 (no decoding)."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -100,12 +97,6 @@ def image_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
             rows = []
             for r in pdf.itertuples():
                 content = bytes(r.content) if r.content is not None else b""
-                if not decode_stub:
-                    # Real implementation seam:
-                    #   from PIL import Image; img = Image.open(io.BytesIO(content))
-                    raise NotImplementedError(
-                        "image decode requires PIL — not provisioned in this container"
-                    )
                 digest = hashlib.md5(content).hexdigest()
                 w = 64 + int(digest[:4], 16) % 1024
                 h = 64 + int(digest[4:8], 16) % 1024
@@ -127,12 +118,10 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def audio_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Decode + feature-extract audio. Stub fabricates a deterministic
-    sample rate / duration / RMS / spectrogram digest from the bytes; the
-    real path calls soundfile/librosa at the marked seam. Same Arrow-batched
-    mapInPandas shape as image_features — the codec swap changes only the
-    per-row body."""
+def audio_features(media: DataFrame) -> DataFrame:
+    """Stub audio features: deterministic sample rate / duration / RMS /
+    spectrogram digest derived from the bytes' md5 (no decoding). Same
+    Arrow-batched mapInPandas shape as image_features."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -141,12 +130,6 @@ def audio_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
             rows = []
             for r in pdf.itertuples():
                 content = bytes(r.content) if r.content is not None else b""
-                if not decode_stub:
-                    # Real implementation seam:
-                    #   import soundfile; data, rate = soundfile.read(io.BytesIO(content))
-                    raise NotImplementedError(
-                        "audio decode requires soundfile/librosa — not provisioned here"
-                    )
                 digest = hashlib.md5(content).hexdigest()
                 rate = 8000 * (1 + int(digest[12:16], 16) % 4)
                 n_samples = len(content) * 4
@@ -172,9 +155,8 @@ def audio_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
 # REAL audio arm (round-9): WAV is a stdlib-parseable container (`wave`),
 # so the audio decode seam gets a real implementation with no external
 # codecs — header fields (rate, frames, channels, width) from the RIFF
-# chunks, samples from the PCM payload. Image/video keep their documented
-# PIL/ffmpeg stubs; this is the one modality the container can decode for
-# real.
+# chunks, samples from the PCM payload. Compressed image/video/audio keep
+# their md5 stubs.
 # --------------------------------------------------------------------------
 
 WAV_FEATURES_SCHEMA = (
@@ -541,7 +523,7 @@ def y4m_frame_stats(media: DataFrame) -> DataFrame:
 FRAME_SAMPLE_SCHEMA = "media_id string, frame_idx int, frame_ts_ms long, frame_digest string"
 
 
-def sample_video_frames(media: DataFrame, every_ms: int = 1000, decode_stub: bool = True) -> DataFrame:
+def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling: one output row per sampled frame. Stub derives a
     deterministic frame count from metadata (`meta['duration_ms']`)."""
 
@@ -551,10 +533,6 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000, decode_stub: boo
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "video decode requires ffmpeg — not provisioned in this container"
-                    )
                 duration = int((r.meta or {}).get("duration_ms", "0"))
                 content = bytes(r.content) if r.content is not None else b""
                 base = hashlib.md5(content).hexdigest()

@@ -390,6 +390,8 @@ def bucketed_facts_if_available(
     refreshes the layout. Returns None when absent, partially present,
     or stale.
     """
+    from vectra_player_spark.tables import _read
+
     key = (id(spark), sf_dir, buckets)
     sig = _lake_signature(spark, sf_dir, ("lineitem", "orders"))
     cached = _BUCKETED_FACTS.get(key)
@@ -420,7 +422,10 @@ def bucketed_facts_if_available(
     for (name, bucket_key), table_name in zip(_FACT_SPECS, table_names):
         if not spark.catalog.tableExists(table_name):
             location = f"{root}/{table_name}"
-            schema_ddl = spark.read.parquet(location).schema.toDDL()
+            # the layout is the raw table rewritten, so its schema is the
+            # raw table's; a layout of an empty lake has no footer to infer
+            # one from (only _SUCCESS)
+            schema_ddl = _read(spark, sf_dir, name).schema.toDDL()
             spark.sql(
                 f"CREATE TABLE {table_name} ({schema_ddl}) USING parquet "
                 f"CLUSTERED BY ({bucket_key}) SORTED BY ({bucket_key}) "

@@ -3,23 +3,21 @@ handles batch ETL and index build, not online ANN serving").
 
 - chunk_events (V1): doc_type-templated chunk text as column expressions
   (vector_indexer/chunker.py:29-150) — pure JVM-side, no UDF.
-- embed_chunks: deterministic hash-projection embedding via pandas UDF.
-  The real model (all-MiniLM-L6-v2, indexer.py:104) is not in this
-  container; the stub has the production plumbing — Arrow-batched UDF,
-  fixed dim, broadcastable config — swap `_embed_batch` for the model
-  call on a GPU/model-enabled cluster.
+- embed_chunks: deterministic hash-projection embedding via an
+  Arrow-batched pandas UDF with a fixed dim (the reference embeds with
+  all-MiniLM-L6-v2, indexer.py:104).
 - build_incremental (V2): timestamp-checkpointed incremental build
   (indexer.py:161-218): read events newer than the checkpoint, chunk,
-  embed, append to the index directory (parquet — LanceDB/Chroma writers
-  slot in behind the same interface), then advance the manifest. Parquet
-  remains canonical truth; the index is derived and rebuildable (V3).
+  embed, append to the parquet index directory, then advance the
+  manifest. Parquet remains canonical truth; the index is derived and
+  rebuildable (V3).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
+import shutil
 
 import pandas as pd
 
@@ -67,185 +65,42 @@ def chunk_events(envelope: DataFrame) -> DataFrame:
     )
 
 
-def embed_chunks(
-    chunks: DataFrame,
-    dim: int = EMBED_DIM,
-    encoder: str = "hash",
-    model_name: str = "sentence-transformers/all-MiniLM-L6-v2",
-) -> DataFrame:
-    """Arrow-batched embedding column. Two encoders behind one config knob
-    (swap-in is CONFIG, not code — reference indexer.py:104 hardcodes the
-    model):
-
-    - ``"hash"`` (default): deterministic stub — tokens → md5 → bucket
-      counts, L2-normalized. Identical call shape to a model encode; the
-      only encoder that runs in this container.
-    - ``"sentence-transformers"``: the reference's all-MiniLM-L6-v2 path.
-      Import-guarded at PLAN time (driver-side ImportError beats a buried
-      executor stack); the model itself loads lazily ONCE PER EXECUTOR
-      inside the UDF (a module-global cache — the standard Spark model-
-      serving pattern, since a SentenceTransformer is not picklable and
-      must not ship through the closure).
-    """
+def embed_chunks(chunks: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
+    """Arrow-batched embedding column: deterministic hash projection —
+    tokens → md5 → bucket counts, L2-normalized, ``dim`` floats per row.
+    Same call shape as a model encode (the reference runs
+    all-MiniLM-L6-v2, indexer.py:104)."""
     from pyspark.sql.pandas.functions import pandas_udf
 
-    if encoder == "hash":
+    @pandas_udf("array<float>")
+    def _embed_batch(texts: pd.Series) -> pd.Series:
+        import hashlib
 
-        @pandas_udf("array<float>")
-        def _embed_batch(texts: pd.Series) -> pd.Series:
-            import hashlib
+        import numpy as np
 
-            import numpy as np
-
-            out = []
-            for t in texts:
-                v = np.zeros(dim, dtype=np.float32)
-                for tok in (t or "").split():
-                    h = int(hashlib.md5(tok.encode()).hexdigest()[:8], 16)
-                    v[h % dim] += 1.0
-                n = np.linalg.norm(v)
-                out.append((v / n if n > 0 else v).tolist())
-            return pd.Series(out)
-
-    elif encoder == "sentence-transformers":
-        # importlib/__init__ does not import its util submodule — the
-        # explicit form guarantees the attribute exists instead of relying
-        # on some other module having loaded importlib.util first.
-        import importlib.util
-
-        if importlib.util.find_spec("sentence_transformers") is None:
-            raise ImportError(
-                "encoder='sentence-transformers' needs the sentence-transformers "
-                "package on driver AND executors (not in this container); "
-                "use encoder='hash' for the deterministic stub"
-            )
-        name = model_name  # close over the string, never the model object
-
-        @pandas_udf("array<float>")
-        def _embed_batch(texts: pd.Series) -> pd.Series:
-            global _ST_MODEL_CACHE
-            try:
-                cache = _ST_MODEL_CACHE
-            except NameError:
-                cache = _ST_MODEL_CACHE = {}
-            if name not in cache:
-                from sentence_transformers import SentenceTransformer
-
-                cache[name] = SentenceTransformer(name)
-            vecs = cache[name].encode(
-                [t or "" for t in texts], normalize_embeddings=True
-            )
-            return pd.Series([v.tolist() for v in vecs])
-
-    else:
-        raise ValueError(f"unknown encoder {encoder!r}")
+        out = []
+        for t in texts:
+            v = np.zeros(dim, dtype=np.float32)
+            for tok in (t or "").split():
+                h = int(hashlib.md5(tok.encode()).hexdigest()[:8], 16)
+                v[h % dim] += 1.0
+            n = np.linalg.norm(v)
+            out.append((v / n if n > 0 else v).tolist())
+        return pd.Series(out)
 
     return chunks.withColumn("embedding", _embed_batch(F.col("text")))
 
 
-class VectorStore:
-    """Store seam behind the indexer (reference: a ChromaDB collection,
-    indexer.py:68-118; north star names LanceDB). Three operations —
-    add / scan / clear — are all the build pipeline needs; online ANN
-    serving stays out of engine scope. Implementations receive whole
-    DataFrames so a real backend can write executor-side (lance/Delta
-    writer, foreachPartition upsert) without driver funneling."""
-
-    def add(self, embedded: DataFrame) -> None:
-        raise NotImplementedError
-
-    def scan(self, spark: SparkSession) -> DataFrame:
-        raise NotImplementedError
-
-    def clear(self) -> None:
-        raise NotImplementedError
-
-
-class ParquetVectorStore(VectorStore):
-    """Default store: parquet directory (canonical, rebuildable truth)."""
+class VectorIndexer:
+    """V2/V3: checkpointed incremental index builder. Vectors live as
+    parquet under ``index_dir/vectors``; the checkpoint is
+    ``index_dir/_manifest/vector_index_checkpoint.json``."""
 
     def __init__(self, index_dir: str):
         self.vec_dir = os.path.join(index_dir, "vectors")
-
-    def add(self, embedded: DataFrame) -> None:
-        embedded.write.mode("append").parquet(self.vec_dir)
-
-    def scan(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.vec_dir)
-
-    def clear(self) -> None:
-        import shutil
-
-        if os.path.exists(self.vec_dir):
-            shutil.rmtree(self.vec_dir)
-
-
-class LanceDBVectorStore(VectorStore):
-    """The north-star backend (reference indexer.py:68-118 uses ChromaDB;
-    the v2 roadmap names LanceDB), import-guarded: constructing it where
-    the ``lancedb`` package exists gives the real store, elsewhere a clear
-    driver-side ImportError — so the parquet→LanceDB swap is constructor
-    CONFIG (``VectorIndexer(store=LanceDBVectorStore(uri))``), not code.
-
-    Exchange is Arrow end-to-end: ``DataFrame.toArrow()`` → ``table.add``
-    (zero row-by-row marshalling). The driver hop is sized by the
-    INCREMENTAL delta, not the corpus; a 100 TB initial build goes through
-    :class:`ParquetVectorStore` first and converts with lance's
-    distributed parquet importer — parquet stays canonical truth either
-    way (SURVEY §2.10: Spark owns batch ETL/index build, not serving).
-    """
-
-    def __init__(self, uri: str, table_name: str = "chunks"):
-        try:
-            import lancedb
-        except ImportError as e:  # pragma: no cover - exercised via fake module
-            raise ImportError(
-                "LanceDBVectorStore needs the lancedb package (not in this "
-                "container); use ParquetVectorStore for the canonical store"
-            ) from e
-        self._db = lancedb.connect(uri)
-        self.table_name = table_name
-
-    def add(self, embedded: DataFrame) -> None:
-        arrow = embedded.toArrow()
-        if self.table_name in set(self._db.table_names()):
-            self._db.open_table(self.table_name).add(arrow)
-        else:
-            self._db.create_table(self.table_name, arrow)
-
-    def scan(self, spark: SparkSession) -> DataFrame:
-        arrow = self._db.open_table(self.table_name).to_arrow()
-        return spark.createDataFrame(arrow.to_pandas())
-
-    def clear(self) -> None:
-        if self.table_name in set(self._db.table_names()):
-            self._db.drop_table(self.table_name)
-
-
-class VectorIndexer:
-    """V2/V3: checkpointed incremental index builder over a VectorStore.
-
-    Swapping the parquet store for LanceDB/Chroma is constructor config
-    (`store=`), not code: the checkpoint/chunk/embed pipeline is
-    store-agnostic."""
-
-    def __init__(
-        self,
-        index_dir: str | None = None,
-        manifest_path: str | None = None,
-        store: VectorStore | None = None,
-    ):
-        if store is None and index_dir is None:
-            raise ValueError("need index_dir (parquet store) or an explicit store")
-        self.index_dir = index_dir
-        self.store = store or ParquetVectorStore(index_dir)
-        if manifest_path is None:
-            if index_dir is None:
-                raise ValueError("manifest_path required when using an external store")
-            manifest_path = os.path.join(
-                index_dir, "_manifest", "vector_index_checkpoint.json"
-            )
-        self.manifest_path = manifest_path
+        self.manifest_path = os.path.join(
+            index_dir, "_manifest", "vector_index_checkpoint.json"
+        )
 
     def last_indexed_ts(self) -> str:
         if os.path.exists(self.manifest_path):
@@ -269,14 +124,15 @@ class VectorIndexer:
         n = embedded.count()
         if n == 0:
             return 0
-        self.store.add(embedded)
+        embedded.write.mode("append").parquet(self.vec_dir)
         max_ts = fresh.agg(F.max("ts")).collect()[0][0]
         self._write_checkpoint(max_ts)
         return n
 
     def rebuild(self, envelope: DataFrame) -> int:
-        """V3: clear store, reset checkpoint to epoch, rerun incremental."""
-        self.store.clear()
+        """V3: clear the vectors, reset checkpoint to epoch, rerun incremental."""
+        if os.path.exists(self.vec_dir):
+            shutil.rmtree(self.vec_dir)
         if os.path.exists(self.manifest_path):
             os.remove(self.manifest_path)
         return self.build_incremental(envelope)
@@ -287,7 +143,7 @@ class VectorIndexer:
         verification and offline evaluation)."""
         from vectra_player_spark.functions.vectors import cosine
 
-        index = self.store.scan(spark)
+        index = spark.read.parquet(self.vec_dir)
         q = embed_chunks(
             spark.createDataFrame([("q", "", "", query_text)], CHUNK_SCHEMA)
         ).select(F.col("embedding").alias("q_vec"))

@@ -1,15 +1,14 @@
 """Multimodal query surface: the Arrow-batched decode pipeline verified
 against SQL.
 
-The container has no media codecs, so the decode step is the documented
-deterministic stub (operators/multimodal.py) — md5 arithmetic over the
-payload bytes. That determinism is an asset: DuckDB can reproduce
-n_bytes/width/height/luma/phash (and the per-frame digests) in pure SQL,
+The image/audio/video feature step is the deterministic stub of
+operators/multimodal.py — md5 arithmetic over the payload bytes. That
+determinism is an asset: DuckDB can reproduce n_bytes/width/height/luma/phash (and the per-frame digests) in pure SQL,
 so the ENTIRE Spark-side plumbing — binary column construction, Arrow
 batch transfer, ``mapInPandas`` schema and batching, the explode shape of
-frame sampling — is hash-checked cross-engine, not just unit-tested. On a
-provisioned cluster only the stub body changes (PIL/ffmpeg at the marked
-seam); every plan shape these queries pin stays identical.
+frame sampling — is hash-checked cross-engine, not just unit-tested. A real
+codec would change only the stub's per-row body; every plan shape these
+queries pin stays identical.
 
 Payloads are fabricated from the `documents` table: content =
 encode(text), one image per doc; video duration derives from n_chars so
@@ -63,7 +62,7 @@ FROM documents
 )
 def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_from_docs(spark, sf_dir, "image")
-    return image_features(media, decode_stub=True).select(
+    return image_features(media).select(
         "media_id",
         "n_bytes",
         "width",
@@ -98,7 +97,7 @@ WHERE duration_ms > 0
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_from_docs(spark, sf_dir, "video")
-    return sample_video_frames(media, every_ms=1000, decode_stub=True)
+    return sample_video_frames(media, every_ms=1000)
 
 
 _AUDIO_FEATURES_ORACLE = """
@@ -127,7 +126,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectra_player_spark.operators.multimodal import audio_features
 
     media = _media_from_docs(spark, sf_dir, "audio")
-    return audio_features(media, decode_stub=True).select(
+    return audio_features(media).select(
         "media_id",
         "n_bytes",
         "sample_rate",
@@ -526,5 +525,5 @@ def phash_band_stats(ph: DataFrame, n_bands: int = 4, max_hamming: int = 3) -> D
 )
 def multimodal_phash_neardup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_from_docs(spark, sf_dir, "image")
-    ph = image_features(media, decode_stub=True).select("media_id", "phash")
+    ph = image_features(media).select("media_id", "phash")
     return phash_band_stats(ph)

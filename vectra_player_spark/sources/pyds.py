@@ -31,9 +31,10 @@ Scale/engine design:
   recovery replays identical micro-batches (exactly-once with the file
   sink's manifest).
 
-The files/socket/kafka readers in :mod:`vectra_player_spark.streaming.jobs`
-remain the transport-substitution seam; this module is the packaged-
-connector form of the same contract.
+The files/socket readers and the Kafka bridge in
+:mod:`vectra_player_spark.streaming.jobs` remain the transport-
+substitution seam; this module is the packaged-connector form of the
+same contract.
 """
 
 from __future__ import annotations

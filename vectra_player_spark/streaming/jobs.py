@@ -1,9 +1,9 @@
 """Streaming jobs: source → envelope → sinks (T5, T6, T9, T11, S5, S10).
 
 The reference's live chain (service.py / sanitizer.py) as Structured
-Streaming queries. Sources are file streams (JSONL directories) standing in
-for the WebSocket feed — in production the same plans run off Kafka by
-swapping the reader; every transformation below is source-agnostic.
+Streaming queries. Sources are file streams (JSONL directories) or a TCP
+socket standing in for the WebSocket feed; Kafka records enter through
+kafka_frames_bridge. Every transformation below is source-agnostic.
 """
 
 from __future__ import annotations
@@ -25,15 +25,13 @@ def read_raw_frames(
     path: str | None = None,
     host: str | None = None,
     port: int | None = None,
-    kafka_servers: str | None = None,
-    topic: str | None = None,
 ) -> DataFrame:
-    """S10 reader family: raw Socket.IO frame streams from interchangeable
-    transports. Every variant yields a `frame` string column (Kafka adds
-    `seq`/`ts_ms` from its offset/timestamp metadata); parse_tick_frames
-    then produces identical TICK_SCHEMA rows regardless of reader — the
-    substitution the reference performs at its CDP-interceptor boundary
-    (src/sources/cdp_websocket_interceptor.py feeding socketio_parser)."""
+    """S10 reader family: raw Socket.IO frame streams from a JSONL/text
+    directory (``"files"``) or a TCP socket (``"socket"``). Both yield one
+    `frame` string column; parse_tick_frames turns it into TICK_SCHEMA
+    rows — the substitution the reference performs at its CDP-interceptor
+    boundary (src/sources/cdp_websocket_interceptor.py feeding
+    socketio_parser). Kafka records enter through kafka_frames_bridge."""
     if source == "files":
         return spark.readStream.text(path).select(F.col("value").alias("frame"))
     if source == "socket":
@@ -44,25 +42,16 @@ def read_raw_frames(
             .load()
             .select(F.col("value").alias("frame"))
         )
-    if source == "kafka":
-        return kafka_frames_bridge(
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", kafka_servers)
-            .option("subscribe", topic)
-            .load()
-        )
-    raise ValueError(f"unknown source {source!r} (files|socket|kafka)")
+    raise ValueError(f"unknown source {source!r} (files|socket)")
 
 
 def kafka_frames_bridge(records: DataFrame) -> DataFrame:
-    """Kafka-record → frame projection, factored out of read_raw_frames so
-    the whole post-`load()` path is testable without a broker: the tests
-    drive it with a recorded-records DataFrame carrying Kafka's exact
-    output schema (key/value binary, topic, partition, offset, timestamp,
-    timestampType — the contract is Kafka's, stable across brokers), so
-    only the `spark.readStream.format("kafka")` call itself is unproven
-    in this container. Offset→seq and log-append-time→ts_ms supply the
-    ordering metadata the parse chain uses for backfill alignment."""
+    """Kafka-record → frame projection over any DataFrame with Kafka's
+    reader output schema (key/value binary, topic, partition, offset,
+    timestamp, timestampType) — e.g. ``spark.readStream.format("kafka")
+    ...load()`` where the connector is on the classpath, or recorded
+    records. Offset→seq and log-append-time→ts_ms supply the ordering
+    metadata the parse chain uses for backfill alignment."""
     return records.select(
         F.col("value").cast("string").alias("frame"),
         F.col("offset").alias("seq"),
@@ -76,10 +65,13 @@ def parse_tick_frames(raw: DataFrame, session_id: str = "live") -> DataFrame:
     The parse chain (Arrow-batched Socket.IO decode, event filter, typed
     JSON projection, partialPrices flattening) is transport-agnostic: a
     reader only has to supply `frame`. Ordering metadata: Kafka's
-    offset/timestamp pass through as seq/ts_ms; transports without
-    metadata (socket, files) fall back to tickCount order and batch
-    ingest time — the reference stamps arrival seq at the interceptor the
-    same way."""
+    offset/timestamp pass through as seq/ts_ms. Frames without transport
+    metadata (socket, files) get seq = tickCount and ts_ms = batch ingest
+    time. That is NOT the reference's order (it stamps an arrival seq at
+    the interceptor): tickCount restarts at 0 in every game, so when one
+    micro-batch holds several games their ticks interleave under the
+    per-batch seq sort of phase_machine/sessionize_games, and gap signals
+    read wall-clock ingest time. Known fault, open."""
     from vectra_player_spark.schema import GAME_STATE_UPDATE_SCHEMA
     from vectra_player_spark.sources.socketio import parse_frames_udf
 

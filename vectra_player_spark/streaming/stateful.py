@@ -21,12 +21,10 @@ the gameId change — the previous game finalizes with its price array, peak,
 and gap flags; `partialPrices` corrections fill missed ticks in place
 before finalization (T3 late-data backfill).
 
-SINGLE-SOURCED CORES (round-5 ADVICE): the per-row replay loops and the
-partial-episode flush live in the pure helpers `_replay_phase`,
-`_replay_session`, `_flush_session_state` — shared verbatim by this
-module's applyInPandasWithState bindings, their TTL wrappers, AND the
-transformWithState arms (streaming/stateful_tws.py). A semantics change
-lands in exactly one place.
+The per-row replay loops and the partial-episode flush are the pure
+helpers `_replay_phase`, `_replay_session` and `_flush_session_state`;
+the applyInPandasWithState bindings and their idle-TTL wrapper are thin
+shells around them, so the semantics can be tested without a stream.
 """
 
 from __future__ import annotations
